@@ -31,9 +31,11 @@ explicit salting, checkpoint-resume with per-partition lineage):
           QUERY time from current k1/b/avgdl — wtf is monotone ↑ in tf
           and ↓ in dl, so the bound stays valid when collection stats
           drift under incremental appends)
-      vocab_parts/bpart=P/         per-partition (th1, th2, df, cf)
-      vocabulary/                  global merge of the partials; since
-                                   r7 th1-range-sorted and carrying
+      vocab_parts/bpart=P/         per-partition (th1, th2, df, cf);
+                                   only finalize's merge input, never
+                                   read by the query side
+      vocabulary/                  global merge of the partials,
+                                   th1-sorted within files and carrying
                                    each term's containing-part list
                                    (bparts array<int>, NULL above
                                    PART_PRUNE_MAX_PER_TERM) — one
@@ -47,7 +49,9 @@ explicit salting, checkpoint-resume with per-partition lineage):
       manifest/part-P.json         per-partition lineage: input
                                    fingerprint, status, metrics
                                    (docs, tokens, postings, bytes, secs)
-      stats/meta.json              global stats + aggregate metrics
+      stats/meta.json              global stats + aggregate metrics;
+                                   codec_version versions this whole
+                                   layout (load_meta refuses others)
 
 Sharding is RANGE on dense doc ids (shard = doc_int // shard_size): each
 shard is a partition-local index over a contiguous doc range (dense
@@ -88,7 +92,7 @@ from .. import B_DEFAULT, K1_DEFAULT, MIN_TOKEN_LENGTH_DEFAULT
 from .codec import encode_doc_ids, encode_varbyte
 
 BLOCK = 128
-CODEC_VERSION = 3
+CODEC_VERSION = 4
 
 # Terms are stored as a 128-bit hash pair (two independent xxhash64
 # passes), NOT as strings. Rationale (measured in this sandbox, and the
@@ -133,33 +137,6 @@ def _encode_posting_list(ids: np.ndarray, tfs: np.ndarray, dls: np.ndarray):
         block_last,
         block_maxtf,
         block_mindl,
-    )
-
-
-def _encode_group(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Single-(shard,term,salt)-group encoder (applyInPandas shape) —
-    kept for tests/tools; the build uses the streaming partition
-    encoder below, which has no per-group Arrow/pandas machinery."""
-    pdf = pdf.sort_values("doc_int")
-    n, gaps, tfs_b, dls_b, blast, bmaxtf, bmindl = _encode_posting_list(
-        pdf["doc_int"].to_numpy(np.int64),
-        pdf["tf"].to_numpy(np.int64),
-        pdf["dl"].to_numpy(np.int64),
-    )
-    return pd.DataFrame(
-        {
-            "shard": [int(pdf["shard"].iloc[0])],
-            "th1": [int(pdf["th1"].iloc[0])],
-            "th2": [int(pdf["th2"].iloc[0])],
-            "salt": [int(pdf["salt"].iloc[0])],
-            "n": [n],
-            "gaps": [gaps],
-            "tfs": [tfs_b],
-            "dls": [dls_b],
-            "block_last": [blast],
-            "block_maxtf": [bmaxtf],
-            "block_mindl": [bmindl],
-        }
     )
 
 
@@ -540,12 +517,13 @@ def _build_one_part(
     spark: SparkSession,
     index_dir: str,
     p: int,
-    shard_size: int,
+    smeta: dict,
     salt_chunk: int,
     min_token_length: int,
     stop_words,
 ) -> dict:
-    """Build postings + vocab partial + docmap for one bpart.
+    """Build postings + vocab partial + docmap for one bpart (``smeta``:
+    the staged.json the caller loaded or wrote).
 
     Shuffle budget (the thing that matters at 100 TB): doc length is
     carried through tokenization (dl = size of the filtered token
@@ -558,7 +536,8 @@ def _build_one_part(
     """
     t0 = time.time()
     sh0 = shuffle_bytes(spark)
-    sub = staged_part_df(spark, index_dir, p)
+    shard_size = smeta["shard_size"]
+    sub = staged_part_df(spark, index_dir, p, smeta)
 
     from .termindex import with_tokens
 
@@ -611,10 +590,12 @@ def _build_one_part(
     # Spark schedules its stages alongside the tf aggregate instead of
     # serializing the whole docmap write onto the part's critical path
     # (~1.5 s of a ~9 s part wall at bench geometry, and the straggler
-    # tail of every multi-part build). Both consumers materialize the
-    # SAME persisted `toks` frame — block-level cache locks make one
-    # computation win, so tokenization still runs once. step_seconds
-    # are per-step wall clocks; docmap now overlaps tf_vocab.
+    # tail of every multi-part build). Both consumers read the SAME
+    # persisted `toks` frame, so each partition's block is STORED once;
+    # but nothing orders the two jobs, so both may compute the same
+    # partition before either block lands — tokenization can run twice
+    # for a partition. step_seconds are per-step wall clocks; docmap
+    # overlaps tf_vocab.
     from concurrent.futures import ThreadPoolExecutor
 
     from pyspark.sql import Observation
@@ -658,9 +639,8 @@ def _build_one_part(
             F.count(F.lit(1)).cast("long").alias("df"),
             F.sum("tf").alias("cf"),
         )
-        # th1-sorted within files so the query-side df/part lookup prunes
-        # row groups on its pushed In(th1) filter — same device as the
-        # postings payload (searchidx reads vocab_parts, not vocabulary).
+        # th1-sorted within files (finalize's merge input; the query side
+        # reads only the merged vocabulary).
         # The hot-term (skew) set rides the same action as an Observation
         # (r8) — the separate filter+collect job re-ran the vocab
         # aggregation; hot terms are few by definition (df > salt_chunk),
@@ -720,9 +700,8 @@ def _build_one_part(
         # spreads the ~|vocab| tiny posting groups evenly over a
         # scale-adaptive task count (≥ cluster parallelism, never fewer
         # than the shard count) and also de-skews hot salted terms.
-        n_enc = ENCODE_PARTITIONS or max(
-            _spp(index_dir), spark.sparkContext.defaultParallelism
-        )
+        n_enc = max(smeta["shards_per_part"],
+                    spark.sparkContext.defaultParallelism)
         postings = (
             enriched.repartition(max(2, n_enc), "shard", "th1", "th2", "salt")
             .sortWithinPartitions("th1", "th2", "salt", "shard", "doc_int")
@@ -785,20 +764,6 @@ def _build_one_part(
     }
 
 
-# A/B override for the encode-stage partition count (None = one
-# partition per shard, i.e. shards_per_part). Experiment-only knob.
-ENCODE_PARTITIONS: "int | None" = None
-
-_SPP_CACHE: dict[str, int] = {}
-
-
-def _spp(index_dir: str) -> int:
-    if index_dir not in _SPP_CACHE:
-        with open(f"{index_dir}/staged.json") as fh:
-            _SPP_CACHE[index_dir] = json.load(fh)["shards_per_part"]
-    return _SPP_CACHE[index_dir]
-
-
 def _merged_vocab_frame(spark: SparkSession, index_dir: str) -> DataFrame:
     """The merged-vocabulary frame finalize_index writes (exposed for
     the plan gate: test_plan_shapes pins that the merge carries NO
@@ -855,6 +820,26 @@ def _merged_vocab_frame(spark: SparkSession, index_dir: str) -> DataFrame:
     return vocab
 
 
+DOCMAP_SCHEMA = "doc_id string, doc_int long, dl long, fp string"
+
+
+def _read_bparts(spark: SparkSession, index_dir: str, table: str,
+                 schema: str) -> DataFrame:
+    """Every ``<table>/bpart=P`` directory on disk, read by EXPLICIT
+    path (``schema`` types the empty frame when there is none). A root
+    read of ``<table>`` is matched by Spark's CacheManager against an
+    open IndexReader's persisted relation over the same root and served
+    from that reader's snapshot — so the mutation paths, which must see
+    the files as they are now, never read a table root."""
+    root = f"{index_dir}/{table}"
+    paths = sorted(
+        f"{root}/{d}" for d in os.listdir(root) if d.startswith("bpart=")
+    ) if os.path.isdir(root) else []
+    if not paths:
+        return spark.createDataFrame([], schema)
+    return spark.read.option("basePath", root).parquet(*paths)
+
+
 def finalize_index(
     spark: SparkSession,
     index_dir: str,
@@ -865,7 +850,15 @@ def finalize_index(
     salt_chunk: int,
 ) -> dict:
     """Merge vocab partials, compute collection stats, write meta."""
+    from pyspark.sql import Observation
+
     vocab = _merged_vocab_frame(spark, index_dir)
+    # the vocab row count rides the write as an Observation: no
+    # read-back jobs over the written files, and no vocab.count(), which
+    # would re-run the whole merge aggregation (most of the finalize
+    # phase at a 200k-term vocabulary)
+    obs_vocab = Observation()
+    vocab = vocab.observe(obs_vocab, F.count(F.lit(1)).alias("n"))
     # the vocab merge shares nothing with the docmap stats / integrity
     # jobs below — run it on a helper thread so Spark schedules them
     # together (guide §2.6) instead of three sequential barriers
@@ -878,12 +871,7 @@ def finalize_index(
         )
     )
     try:
-        if os.path.isdir(f"{index_dir}/docmap"):
-            docmap = spark.read.parquet(f"{index_dir}/docmap")
-        else:
-            docmap = spark.createDataFrame(
-                [], "doc_id string, doc_int long, dl long, fp string"
-            )
+        docmap = _read_bparts(spark, index_dir, "docmap", DOCMAP_SCHEMA)
         tomb = load_tombstones(index_dir)
         if tomb:
             docmap = docmap.filter(
@@ -911,7 +899,7 @@ def finalize_index(
         manifest_postings = sum(pm.get("n_postings", 0) for pm in parts)
         try:
             final_postings = int(
-                spark.read.parquet(f"{index_dir}/postings")
+                _read_bparts(spark, index_dir, "postings", "n long")
                 .agg(F.coalesce(F.sum("n"), F.lit(0)))
                 .collect()[0][0]
             )
@@ -939,20 +927,11 @@ def finalize_index(
         # doc_int // (shard_size * shards_per_part) == bpart by
         # construction (staging assigns dense ids in part order) — the
         # query side derives docmap PARTITION filters from winner ids
-        "shards_per_part": (
-            _spp(index_dir)
-            if os.path.exists(f"{index_dir}/staged.json") else None
-        ),
+        "shards_per_part": _staged_meta(index_dir)["shards_per_part"],
         "n_docs": n_docs,
         "total_terms": total_terms,
         "avgdl": avgdl,
-        # count the WRITTEN vocabulary (parquet row-count metadata, no
-        # scan) instead of vocab.count(), which re-ran the whole merge
-        # aggregation — at a 200k-term vocabulary that recompute was
-        # most of the finalize phase (r8)
-        "n_vocab_terms": int(
-            spark.read.parquet(f"{index_dir}/vocabulary").count()
-        ),
+        "n_vocab_terms": int(obs_vocab.get["n"]),
         "posting_rows": sum(pm.get("posting_rows", 0) for pm in parts),
         "n_postings": sum(pm.get("n_postings", 0) for pm in parts),
         "compressed_payload_bytes": sum(
@@ -1002,7 +981,6 @@ def build_index(
     smeta = _stage(docs, index_dir, id_col, text_col, shard_size,
                    shards_per_part, id_assign_partitions)
     stage_seconds = round(time.time() - t_stage0, 3)
-    _SPP_CACHE[index_dir] = shards_per_part
 
     pending = [
         p for p in smeta["parts"]
@@ -1015,7 +993,7 @@ def build_index(
         built = 0
         for p in pending:
             metrics = _build_one_part(
-                spark, index_dir, p, shard_size, salt_chunk,
+                spark, index_dir, p, smeta, salt_chunk,
                 min_token_length, stop_words,
             )
             _write_manifest(index_dir, p, metrics)
@@ -1029,7 +1007,7 @@ def build_index(
 
         def run(p: int) -> None:
             metrics = _build_one_part(
-                spark, index_dir, p, shard_size, salt_chunk,
+                spark, index_dir, p, smeta, salt_chunk,
                 min_token_length, stop_words,
             )
             _write_manifest(index_dir, p, metrics)
@@ -1053,8 +1031,21 @@ def build_index(
 
 
 def load_meta(index_dir: str) -> dict:
+    """The finalized index's stats/meta.json. ``codec_version`` versions
+    the WHOLE on-disk layout — postings codec, the bparts-carrying
+    vocabulary, the bpart-partitioned docmap and ``shards_per_part`` —
+    and the query and mutation paths read only the current one, so an
+    index written under any other version is refused here, before a
+    caller creates a relation over it."""
     with open(f"{index_dir}/stats/meta.json") as fh:
-        return json.load(fh)
+        meta = json.load(fh)
+    if meta.get("codec_version") != CODEC_VERSION:
+        raise ValueError(
+            f"index at {index_dir} has codec_version "
+            f"{meta.get('codec_version')}, engine expects {CODEC_VERSION} "
+            "— rebuild the index"
+        )
+    return meta
 
 
 def append_docs(
@@ -1073,11 +1064,10 @@ def append_docs(
     start at the next part boundary so no existing part is rewritten.
     """
     spark = new_docs.sparkSession
-    smeta = _staged_meta(index_dir)
     meta = load_meta(index_dir)
+    smeta = _staged_meta(index_dir)
     shard_size = smeta["shard_size"]
-    spp = smeta["shards_per_part"]
-    part_docs = shard_size * spp
+    part_docs = shard_size * smeta["shards_per_part"]
     start_part = (max(smeta["parts"]) + 1) if smeta["parts"] else 0
     start_id = start_part * part_docs
     gen = len(smeta["gens"])
@@ -1100,11 +1090,10 @@ def append_docs(
     with open(tmp, "w") as fh:
         json.dump(smeta, fh)
     os.replace(tmp, f"{index_dir}/staged.json")
-    _SPP_CACHE[index_dir] = spp
 
     for p in new_parts:
         metrics = _build_one_part(
-            spark, index_dir, int(p), shard_size, meta["salt_chunk"],
+            spark, index_dir, int(p), smeta, meta["salt_chunk"],
             meta["min_token_length"], None,
         )
         _write_manifest(index_dir, int(p), metrics)
@@ -1143,6 +1132,7 @@ def sync_docs(
     {"new": n, "modified": n, "deleted": n, "meta": meta}.
     """
     spark = docs.sparkSession
+    load_meta(index_dir)  # refuses an index of another layout version
     incoming = docs.select(
         F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")
     )
@@ -1151,12 +1141,7 @@ def sync_docs(
     inc = incoming.select(
         "doc_id", F.md5(collapse_whitespace(F.col("text"))).alias("fp_new")
     )
-    docmap = spark.read.parquet(f"{index_dir}/docmap")
-    if "fp" not in docmap.columns:
-        raise ValueError(
-            "docmap has no fp column — index predates change detection; "
-            "rebuild or append-only"
-        )
+    docmap = _read_bparts(spark, index_dir, "docmap", DOCMAP_SCHEMA)
     tomb = load_tombstones(index_dir)
     if tomb:
         docmap = docmap.filter(
@@ -1227,7 +1212,8 @@ def delete_docs(spark: SparkSession, index_dir: str, doc_keys: list) -> dict:
     (the reference rewrites posting lists eagerly —
     inverted_index_builder.py:70-92 — which at 10^12 docs is exactly
     what we must NOT do per deletion)."""
-    docmap = spark.read.parquet(f"{index_dir}/docmap")
+    meta = load_meta(index_dir)
+    docmap = _read_bparts(spark, index_dir, "docmap", DOCMAP_SCHEMA)
     ints = [
         r["doc_int"]
         for r in docmap.filter(F.col("doc_id").isin(doc_keys)).collect()
@@ -1241,7 +1227,7 @@ def delete_docs(spark: SparkSession, index_dir: str, doc_keys: list) -> dict:
     # Stats (N/avgdl/df) intentionally stay pre-delete until compaction:
     # tombstoned docs vanish from results immediately; surviving docs'
     # scores are unchanged until compact_index() recomputes everything.
-    return load_meta(index_dir)
+    return meta
 
 
 def compact_index(spark: SparkSession, index_dir: str) -> dict:
@@ -1264,8 +1250,8 @@ def compact_index(spark: SparkSession, index_dir: str) -> dict:
     import bisect
     import shutil
 
-    tomb = load_tombstones(index_dir)
     meta = load_meta(index_dir)
+    tomb = load_tombstones(index_dir)
     if not tomb:
         return meta
     smeta = _staged_meta(index_dir)
@@ -1311,7 +1297,7 @@ def compact_index(spark: SparkSession, index_dir: str) -> dict:
     # rebuild stale parts
     for p in affected:
         metrics = _build_one_part(
-            spark, index_dir, p, meta["shard_size"], meta["salt_chunk"],
+            spark, index_dir, p, smeta, meta["salt_chunk"],
             meta["min_token_length"], None,
         )
         _write_manifest(index_dir, p, metrics)

@@ -160,39 +160,25 @@ def test_conjunctive_mode(spark, corpus, index_dir):
         assert {r["doc_id"] for r in got} <= or_docs
 
 
-def test_search_legacy_layout_without_vocab_parts(spark, corpus,
-                                                  index_dir, tmp_path):
-    """The three df-lookup layouts must all search identically:
-    r7 (merged vocabulary CARRIES bparts — pruning works even with
-    vocab_parts deleted), r6 (vocabulary without bparts + vocab_parts
-    partials — pruning via the partial fan-out), and true legacy
-    (neither — merged-vocabulary fallback, no pruning); search_rows
-    matches the DataFrame path on the legacy layout."""
+def test_search_without_vocab_parts_refuses_old_layout(spark, corpus,
+                                                      index_dir, tmp_path):
+    """The query side reads ONE layout: the merged vocabulary carries
+    each term's df AND its containing bparts, so an index with
+    vocab_parts deleted searches and prunes exactly like the original.
+    An index written under an older layout (codec_version 3) is refused
+    by every entry point with a rebuild error, before anything is
+    read or written."""
+    import json
     import shutil
 
+    from oboyu_spark.operators.postings import (
+        append_docs, compact_index, delete_docs, sync_docs,
+    )
     from oboyu_spark.operators.searchidx import IndexReader, _LAST_SCAN_INFO
 
-    def _strip_bparts(d):
-        voc = spark.read.parquet(f"{d}/vocabulary").drop("bparts")
-        tmpv = f"{d}/vocabulary_tmp"
-        voc.write.parquet(tmpv)
-        shutil.rmtree(f"{d}/vocabulary")
-        shutil.move(tmpv, f"{d}/vocabulary")
-
-    # r7 layout minus the partials: pruning info survives in the
-    # merged vocabulary
     nopartials = str(tmp_path / "nopartials_idx")
     shutil.copytree(index_dir, nopartials)
     shutil.rmtree(f"{nopartials}/vocab_parts")
-    # r6 layout: partials present, merged vocabulary without bparts
-    r6style = str(tmp_path / "r6_idx")
-    shutil.copytree(index_dir, r6style)
-    _strip_bparts(r6style)
-    # true legacy: neither source of part info
-    legacy = str(tmp_path / "legacy_idx")
-    shutil.copytree(nopartials, legacy)
-    _strip_bparts(legacy)
-
     for q in ["spark index", "検索 索引"]:
         exp = [(r["doc_id"], r["score"])
                for r in search_index(spark, index_dir, q, k=8).collect()]
@@ -200,25 +186,85 @@ def test_search_legacy_layout_without_vocab_parts(spark, corpus,
         got = [(r["doc_id"], r["score"])
                for r in search_index(spark, nopartials, q, k=8).collect()]
         assert got == exp, q
+        assert base_parts is not None
         assert _LAST_SCAN_INFO["live_parts"] == base_parts  # still prunes
-        got = [(r["doc_id"], r["score"])
-               for r in search_index(spark, r6style, q, k=8).collect()]
-        assert got == exp, q
-        assert _LAST_SCAN_INFO["live_parts"] == base_parts
-        got = [(r["doc_id"], r["score"])
-               for r in search_index(spark, legacy, q, k=8).collect()]
-        assert got == exp, q
-        assert _LAST_SCAN_INFO["live_parts"] is None  # no pruning info
-    reader = IndexReader(spark, legacy)
+
+    old = str(tmp_path / "v3_idx")
+    shutil.copytree(index_dir, old)
+    with open(f"{old}/stats/meta.json") as fh:
+        meta = json.load(fh)
+    meta["codec_version"] = 3
+    with open(f"{old}/stats/meta.json", "w") as fh:
+        json.dump(meta, fh)
+    with open(f"{old}/staged.json") as fh:
+        staged = fh.read()
+    new = spark.createDataFrame([("v3#new", "spark index")],
+                                "doc_id string, text string")
+    for call in (
+        lambda: search_index(spark, old, "spark index", k=8),
+        lambda: IndexReader(spark, old),
+        lambda: append_docs(new, old),
+        lambda: sync_docs(new, old),
+        lambda: delete_docs(spark, old, ["v3#new"]),
+        lambda: compact_index(spark, old),
+    ):
+        with pytest.raises(ValueError, match="rebuild the index"):
+            call()
+    with open(f"{old}/staged.json") as fh:
+        assert fh.read() == staged
+    assert not (tmp_path / "v3_idx" / "tombstones").exists()
+
+
+def test_append_with_open_reader(spark, index_dir, tmp_path):
+    """A warm IndexReader's cached relations must not leak into the
+    mutation paths: finalize reads the files on disk, so the append
+    succeeds with the same meta as the same append with no reader open,
+    and a delete of an appended key finds it; the open reader keeps
+    serving its open-time snapshot, and a reopened reader sees the
+    appended docs."""
+    import shutil
+
+    from oboyu_spark.operators.postings import (
+        append_docs, delete_docs, load_tombstones,
+    )
+    from oboyu_spark.operators.searchidx import IndexReader
+
+    cold = str(tmp_path / "cold_idx")
+    warm = str(tmp_path / "warm_idx")
+    shutil.copytree(index_dir, cold)
+    shutil.copytree(index_dir, warm)
+    new = spark.createDataFrame(
+        [(f"appended#{i}", f"zzappended spark index {'pad ' * i}")
+         for i in range(6)],
+        "doc_id string, text string",
+    )
+    keys = ("n_docs", "avgdl", "n_vocab_terms", "n_postings")
+    exp = append_docs(new, cold)
+    delete_docs(spark, cold, ["appended#5"])
+
+    reader = IndexReader(spark, warm)
     try:
-        rows = reader.search_rows("spark index", k=8)
-        assert [(d, s) for _, d, s in rows] == [
-            (r["doc_id"], r["score"])
-            for r in search_index(spark, legacy, "spark index", k=8)
-            .collect()
-        ]
+        before = reader.search_rows("spark index", k=8)
+        assert before
+        got = append_docs(new, warm)
+        assert {k: got[k] for k in keys} == {k: exp[k] for k in keys}
+        assert reader.search_rows("spark index", k=8) == before
+        assert reader.search_rows("zzappended", k=3) == []
+        delete_docs(spark, warm, ["appended#5"])
     finally:
         reader.close()
+    assert load_tombstones(warm) == load_tombstones(cold)
+    assert len(load_tombstones(warm)) == 1
+    fresh = IndexReader(spark, warm)
+    try:
+        rows = fresh.search_rows("zzappended", k=3)
+    finally:
+        fresh.close()
+    assert [d for _, d, _ in rows] == [
+        r["doc_id"]
+        for r in search_index(spark, cold, "zzappended", k=3).collect()
+    ]
+    assert len(rows) == 3 and all(d.startswith("appended#") for _, d, _ in rows)
 
 
 def test_index_reader_matches_oneshot(spark, index_dir):

@@ -89,14 +89,22 @@ def test_scan_prunes_columns(spark, index_dir):
     assert read_schema and "gaps" not in read_schema[0], plan
 
 
-def test_search_prunes_parts_by_term(spark, tmp_path):
+def test_search_prunes_parts_by_term(spark, tmp_path, monkeypatch):
     """VERDICT r5 #3: postings are doc-range-sharded, so a selective
-    query must NOT open every bpart — the vocab_parts lookup learns
-    which parts contain each term and the postings scan is limited to
-    their union (a PartitionFilter on the bpart= directory column).
-    A term planted in ONE part must scan only that part's files, with
-    results identical to the planted doc."""
+    query must NOT open every bpart — the merged vocabulary's bparts
+    column says which parts contain each term and the postings scan is
+    limited to their union (a PartitionFilter on the bpart= directory
+    column). A term planted in ONE part must scan only that part's
+    files, with results identical to the planted doc.
+
+    The one-shot search is also pinned at EIGHT Spark jobs: a schema
+    job per relation (vocabulary, postings, docmap), the vocabulary
+    lookup, the scatter (two AQE jobs), the hydration and the result
+    collect — and no relation over the vocab_parts partials, which are
+    only finalize's merge input."""
     import re
+
+    from pyspark.sql.readwriter import DataFrameReader
 
     from oboyu_spark.operators import searchidx as SI
     from oboyu_spark.operators.searchidx import search_index
@@ -111,7 +119,25 @@ def test_search_prunes_parts_by_term(spark, tmp_path):
     build_index(docs, d, shard_size=50, shards_per_part=2,
                 id_assign_partitions=4)
 
-    res = search_index(spark, d, "zebraquux", k=5).collect()
+    read_paths: list[str] = []
+    real_parquet = DataFrameReader.parquet
+
+    def spy(self, *paths, **kw):
+        read_paths.extend(paths)
+        return real_parquet(self, *paths, **kw)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", spy)
+    sc = spark.sparkContext
+    sc.setJobGroup("oneshot_pin", "one-shot search")
+    try:
+        res = search_index(spark, d, "zebraquux", k=5).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    monkeypatch.setattr(DataFrameReader, "parquet", real_parquet)
+    jobs = sc.statusTracker().getJobIdsForGroup("oneshot_pin")
+    assert len(jobs) == 8, f"one-shot search ran {len(jobs)} jobs: {jobs}"
+    assert read_paths and not any("vocab_parts" in p for p in read_paths), \
+        read_paths
     assert [r["doc_id"] for r in res] == ["250"]
     # the search limited its scan to a strict subset of parts
     live = SI._LAST_SCAN_INFO["live_parts"]
