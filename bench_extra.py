@@ -86,9 +86,10 @@ def run_mixed(spark, reps: int = 3) -> dict:
                 dt, n = run(s)
                 rows[s].append(round(dt, 3))
                 out["batch_mixed_rows"] = n
-        out["auto_scorer_decision"] = SI._LAST_SCAN_INFO.get("auto_scorer")
-        out["auto_bmw_query_count"] = len(
-            SI._LAST_SCAN_INFO.get("auto_bmw_queries") or [])
+        _, info = SI._search(spark, reader.meta, reader._dfs, bs_dir,
+                             mixed, 10, "auto")
+        out["auto_scorer_decision"] = info["scorer"]
+        out["auto_bmw_query_count"] = len(info["bmw_queries"])
         for s, vals in rows.items():
             out[f"batch_mixed_{s}_bigshard"] = min(vals)
             out[f"batch_mixed_{s}_reps"] = vals

@@ -96,7 +96,8 @@ try:
         return round(statistics.median(lat), 4)
 
     p50(queries[:3])  # warmup (JIT + footer cache)
-    parts_touched = searchidx._LAST_SCAN_INFO.get("live_parts")
+    parts_touched = searchidx._search(spark, meta, None, idx, queries[2],
+                                      10, "taat")[1]["live_parts"]
     out["pruned_parts_touched"] = (
         len(parts_touched) if parts_touched is not None else None
     )

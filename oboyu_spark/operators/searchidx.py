@@ -13,10 +13,13 @@ Plan shape per batch of queries:
    ids are contiguous (range sharding), so the accumulator is a flat
    float64 array and each posting costs one vectorized add. Each shard
    emits its local top-k with the global tie-break.
-3. gather: global candidates per query (rank window over ≤ shards×k
-   rows, boundary score-ties kept), hydrate original doc keys via the
-   docmap, final top-k cut tie-broken on the ORIGINAL doc_id (doc_int
-   order only matches key order within a shard, not across appends).
+3. gather: global candidates per query (rank cut over ≤ shards×k
+   rows, boundary score-ties kept — on the driver for small candidate
+   sets, as a Spark rank window above ``DRIVER_CUT_MAX_ROWS``), then,
+   for both, driver-side hydration of the winners' original doc keys
+   from the docmap and the final top-k cut tie-broken on the ORIGINAL
+   doc_id (doc_int order only matches key order within a shard, not
+   across appends).
 
 Exactness: TAAT scores every matched posting — results match the
 relational plan bit-for-bit up to float summation order (tests compare
@@ -27,7 +30,6 @@ pruned alternative; both must agree exactly on fixtures.
 from __future__ import annotations
 
 import math
-import threading
 import time
 from typing import Callable, Sequence
 
@@ -41,6 +43,7 @@ from .codec import decode_doc_ids, decode_varbyte
 from .postings import load_meta
 
 RESULT_SCHEMA = "query_id int, doc_int long, score double"
+HITS_SCHEMA = "query_id int, doc_id string, score double"
 
 # gather strategy cutover: below this many candidate rows
 # (queries × shards × k) the shard winners are rank-cut on the driver
@@ -65,40 +68,6 @@ PART_PRUNE_MAX_UNION = 16384
 # (0.6×) at 10k-doc shards or on all-hot queries.
 AUTO_BMW_MIN_SHARD = 64_000
 AUTO_BMW_MAX_DF_FRAC = 0.01
-
-class _ThreadLocalScanInfo(threading.local):
-    """Dict-shaped per-THREAD record of the last search's pruning
-    decision — which bparts the postings scan was limited to (None =
-    no pruning applied). Overwritten per _search call; read by
-    test_plan_shapes/test_index. Thread-local (ADVICE r6) so
-    concurrent searches on one SparkSession don't interleave each
-    other's records; note exp_part_prune.py's PART_PRUNE_MAX_UNION
-    override remains a module-global experiment knob, not a serving
-    seam."""
-
-    def __init__(self) -> None:
-        self._d: dict = {}
-
-    def clear(self) -> None:
-        self._d.clear()
-
-    def get(self, key, default=None):
-        return self._d.get(key, default)
-
-    def __getitem__(self, key):
-        return self._d[key]
-
-    def __setitem__(self, key, value) -> None:
-        self._d[key] = value
-
-    def __contains__(self, key) -> bool:
-        return key in self._d
-
-    def __repr__(self) -> str:
-        return repr(self._d)
-
-
-_LAST_SCAN_INFO = _ThreadLocalScanInfo()
 
 
 def _docmap_for_ids(
@@ -324,16 +293,9 @@ def search_index(
     One-shot form — re-reads the index tables per call. For repeated /
     interactive queries use :class:`IndexReader`, which pins the
     postings/vocabulary/docmap in executor memory."""
-    return _search(
-        spark,
-        load_meta(index_dir),
-        None,
-        index_dir,
-        queries,
-        k,
-        scorer,
-        mode,
-    )
+    rows, _ = _search(spark, load_meta(index_dir), None, index_dir,
+                      queries, k, scorer, mode)
+    return spark.createDataFrame(rows, HITS_SCHEMA)
 
 
 class IndexReader:
@@ -380,22 +342,22 @@ class IndexReader:
 
     def search(self, queries: str | Sequence[str], k: int = 10,
                scorer: str = "taat", mode: str = "or") -> DataFrame:
-        return _search(self.spark, self.meta, self._dfs, self.index_dir,
-                       queries, k, scorer, mode, df_cache=self._df_cache,
-                       docmap_cache=self._docmap_cache)
+        return self.spark.createDataFrame(
+            self.search_rows(queries, k, scorer, mode), HITS_SCHEMA
+        )
 
     def search_rows(self, queries: str | Sequence[str], k: int = 10,
                     scorer: str = "taat",
                     mode: str = "or") -> "list[tuple[int, str, float]]":
         """Like :meth:`search` but returns the final (query_id, doc_id,
-        score) tuples driver-side. On the warm driver-cut path the
-        winners are already driver-local, so this skips the
-        createDataFrame→collect round-trip — one whole Spark job off
-        every warm serving query (the serve loop and the hybrid fold
-        consume rows, not a frame)."""
-        return _search(self.spark, self.meta, self._dfs, self.index_dir,
-                       queries, k, scorer, mode, df_cache=self._df_cache,
-                       docmap_cache=self._docmap_cache, return_rows=True)
+        score) tuples driver-side. The gather already holds them there,
+        so this skips the createDataFrame→collect round-trip — one
+        whole Spark job off every warm serving query (the serve loop
+        and the hybrid fold consume rows, not a frame)."""
+        rows, _ = _search(self.spark, self.meta, self._dfs, self.index_dir,
+                          queries, k, scorer, mode, df_cache=self._df_cache,
+                          docmap_cache=self._docmap_cache)
+        return rows
 
     def close(self) -> None:
         for df in self._dfs.values():
@@ -430,17 +392,19 @@ def _search(
     mode: str = "or",
     df_cache: dict | None = None,
     docmap_cache: dict | None = None,
-    return_rows: bool = False,
-) -> DataFrame:
-    """``return_rows=True`` returns the final results as a driver list
-    of (query_id, doc_id, score) tuples instead of a DataFrame. On the
-    driver-cut path the winners are ALREADY driver-local after the
-    scatter, so this skips the createDataFrame→collect round-trip — a
-    whole Spark job off the warm serving path (the fold consumers:
-    ``IndexReader.search_rows``, ``hybrid_search_folded``,
-    serve_index's plain response)."""
+) -> tuple[list[tuple[int, str, float]], dict]:
+    """Returns ``(rows, info)``. ``rows`` are the final (query_id,
+    doc_id, score) tuples, sorted by query_id, score desc, doc_id asc.
+    ``info`` records this search's decisions: ``live_parts`` (the
+    pruned bpart list, None = no pruning), ``scorer`` (the scorer that
+    ran, None when no scatter ran), ``bmw_queries`` (query ids scored
+    by BMW under ``scorer="auto"``) and ``stage_seconds`` (wall time
+    of the vocab / scatter / hydrate steps, 0.0 when skipped)."""
     if isinstance(queries, str):
         queries = [queries]
+    stage_secs = dict.fromkeys(("vocab", "scatter", "hydrate"), 0.0)
+    info = {"live_parts": None, "scorer": None, "bmw_queries": [],
+            "stage_seconds": stage_secs}
 
     def table(name: str) -> DataFrame:
         if dfs is not None:
@@ -455,15 +419,8 @@ def _search(
     # BEFORE vocabulary filtering (absent terms make "and" empty)
     qreq = {qid: len(qterms) for qid, qterms in qmap.items()}
 
-    def ret_empty():
-        if return_rows:
-            return []
-        return spark.createDataFrame(
-            [], "query_id int, doc_id string, score double"
-        )
-
     if not all_terms or n_docs == 0 or avgdl <= 0:
-        return ret_empty()
+        return [], info
 
     # hash the query terms exactly as the build did — driver-side
     # (pure-python XXH64 pinned against F.xxhash64; saves a Spark job
@@ -501,7 +458,6 @@ def _search(
                 df_by_hash[h], parts_by_hash[h] = cached
         else:
             missing.append(h)
-    stage_secs: dict[str, float] = {}
     if missing:
         _t_vocab = time.time()
         miss_h1 = sorted({h1 for h1, _ in missing})
@@ -548,7 +504,7 @@ def _search(
         if df is not None
     }
     if not idf_by_hash:
-        return ret_empty()
+        return [], info
 
     # rewrite query maps onto hash keys
     qmap = {
@@ -572,18 +528,12 @@ def _search(
     # relation first — as r7 did — paid the full partition-directory
     # listing the explicit-path read exists to skip.
     part_sets = [parts_by_hash.get(h) for h in idf_by_hash]
-    _LAST_SCAN_INFO.clear()
-    # per-stage wall clocks of this search's sequential driver steps
-    # (diagnostic, like live_parts — serving observability + the r8
-    # latency-floor profile)
-    _LAST_SCAN_INFO["stage_seconds"] = stage_secs
-    _LAST_SCAN_INFO["live_parts"] = None
     live_parts = None
     if all(ps is not None for ps in part_sets):
         lp = sorted(set().union(*part_sets))
         if len(lp) <= PART_PRUNE_MAX_UNION:
             live_parts = lp
-            _LAST_SCAN_INFO["live_parts"] = live_parts
+    info["live_parts"] = live_parts
     if live_parts is not None and dfs is None:
         # one-shot path (r7): build the relation from the live bpart
         # directories EXPLICITLY instead of filtering a root read —
@@ -642,12 +592,11 @@ def _search(
         else:
             scorer = "mixed"
             qmap, bmw_qmap = hot_q, sel_q
-        _LAST_SCAN_INFO["auto_scorer"] = scorer
-        if scorer == "mixed":
-            _LAST_SCAN_INFO["auto_bmw_queries"] = sorted(sel_q)
+        info["bmw_queries"] = sorted(sel_q)
 
     if mode == "and":
         # intersection needs per-doc matched-term counts → TAAT
+        scorer = "taat"
         fn = make_taat_scorer(qmap, idf_map, k1, b, avgdl, k, shard_size,
                               tomb, mode="and", qreq=qreq)
     elif scorer == "taat":
@@ -661,6 +610,7 @@ def _search(
                                shard_size, tomb)
     else:
         raise ValueError(f"unknown scorer {scorer!r}")
+    info["scorer"] = scorer
 
     local = postings.groupBy("shard").applyInPandas(fn, schema=RESULT_SCHEMA)
 
@@ -671,97 +621,58 @@ def _search(
     # the k boundary (rank semantics) and the final cut happens on the
     # hydrated original keys.
     n_shards = max(1, -(-n_docs // shard_size))
-    driver_cut = len(queries) * n_shards * k <= DRIVER_CUT_MAX_ROWS
-    if driver_cut:
+    _t_sc = time.time()
+    if len(queries) * n_shards * k <= DRIVER_CUT_MAX_ROWS:
         # small candidate set: collect the shard winners directly and
         # rank-cut on the driver — skips the window's shuffle exchange
         # (one fewer stage on the latency path; p50 matters in serving)
-        _t_sc = time.time()
         top_rows = _driver_rank_cut(local.collect(), k)
-        stage_secs["scatter"] = round(time.time() - _t_sc, 4)
-        if not top_rows:
-            return ret_empty()
-        # winners are driver-known ids → hydrate driver-side: one
-        # pruned docmap scan for cache-missed ids (no join job), zero
-        # Spark jobs when every winner is already cached in a warm
-        # IndexReader. The docmap is sorted by doc_int, so the isin
-        # filter prunes to the few row groups containing misses.
-        ids = sorted({int(r["doc_int"]) for r in top_rows})
-        known = docmap_cache if docmap_cache is not None else {}
-        miss = [i for i in ids if i not in known]
-        fetched: dict[int, str] = {}
-        if miss:
-            _t_hy = time.time()
-            rows = (
-                _docmap_for_ids(
-                    dfs["docmap"] if dfs is not None else None, meta,
-                    miss, spark=spark, index_dir=index_dir,
-                )
-                .select("doc_int", "doc_id")
-                .collect()
-            )
-            stage_secs["hydrate"] = round(time.time() - _t_hy, 4)
-            fetched = {int(r["doc_int"]): r["doc_id"] for r in rows}
-            if (docmap_cache is not None
-                    and len(docmap_cache) < IndexReader.DOCMAP_CACHE_MAX):
-                docmap_cache.update(fetched)
-        by_q: dict[int, list[tuple[float, str]]] = {}
-        for r in top_rows:
-            di = int(r["doc_int"])
-            did = known.get(di, fetched.get(di))
-            if did is None:  # docmap gap — mirror inner-join semantics
-                continue
-            by_q.setdefault(int(r["query_id"]), []).append(
-                (float(r["score"]), did)
-            )
-        final = []
-        for qid in sorted(by_q):
-            ranked = sorted(by_q[qid], key=lambda t: (-t[0], t[1]))[:k]
-            final.extend((qid, d, s) for s, d in ranked)
-        if not final:
-            return ret_empty()
-        if return_rows:
-            return final  # already (query_id, doc_id, score) tuples
-        return spark.createDataFrame(
-            final, "query_id int, doc_id string, score double"
+    else:
+        # cluster scale (10^4+ shards): rank in Spark, collect only the
+        # ≤ k winners (plus boundary ties) per query
+        w = Window.partitionBy("query_id").orderBy(F.col("score").desc())
+        top_rows = (
+            local.withColumn("rnk", F.rank().over(w))
+            .filter(F.col("rnk") <= k)
+            .drop("rnk")
+            .collect()
         )
-    # cluster scale (10^4+ shards): rank in Spark, then hydrate keys
-    # from the docmap with an id-pushed filter — the docmap is sorted
-    # by doc_int, so parquet min/max stats prune to the few row groups
-    # containing winners instead of scanning all 10^12 rows
-    w = Window.partitionBy("query_id").orderBy(F.col("score").desc())
-    _t_sc = time.time()
-    top_rows = (
-        local.withColumn("rnk", F.rank().over(w))
-        .filter(F.col("rnk") <= k)
-        .drop("rnk")
-        .collect()
-    )
     stage_secs["scatter"] = round(time.time() - _t_sc, 4)
-    if not top_rows:
-        return ret_empty()
+    # winners are driver-known ids → hydrate driver-side: one pruned
+    # docmap scan for cache-missed ids (no join job), zero Spark jobs
+    # when every winner is already cached in a warm IndexReader. The
+    # docmap is sorted by doc_int, so the isin filter prunes to the few
+    # row groups containing misses.
     ids = sorted({int(r["doc_int"]) for r in top_rows})
-    tiny = spark.createDataFrame(
-        [(int(r["query_id"]), int(r["doc_int"]), float(r["score"]))
-         for r in top_rows],
-        "query_id int, doc_int long, score double",
-    )
-    docmap = _docmap_for_ids(
-        dfs["docmap"] if dfs is not None else None, meta, ids,
-        spark=spark, index_dir=index_dir,
-    ).select("doc_int", "doc_id")
-    w2 = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("doc_id").asc()
-    )
-    out = (
-        docmap.join(F.broadcast(tiny), "doc_int")
-        .select("query_id", "doc_id", "score")
-        .withColumn("rn", F.row_number().over(w2))
-        .filter(F.col("rn") <= k)
-        .drop("rn")
-        .orderBy("query_id", F.col("score").desc(), F.col("doc_id").asc())
-    )
-    if return_rows:
-        return [(int(r["query_id"]), r["doc_id"], float(r["score"]))
-                for r in out.collect()]
-    return out
+    known = docmap_cache if docmap_cache is not None else {}
+    miss = [i for i in ids if i not in known]
+    fetched: dict[int, str] = {}
+    if miss:
+        _t_hy = time.time()
+        rows = (
+            _docmap_for_ids(
+                dfs["docmap"] if dfs is not None else None, meta,
+                miss, spark=spark, index_dir=index_dir,
+            )
+            .select("doc_int", "doc_id")
+            .collect()
+        )
+        stage_secs["hydrate"] = round(time.time() - _t_hy, 4)
+        fetched = {int(r["doc_int"]): r["doc_id"] for r in rows}
+        if (docmap_cache is not None
+                and len(docmap_cache) < IndexReader.DOCMAP_CACHE_MAX):
+            docmap_cache.update(fetched)
+    by_q: dict[int, list[tuple[float, str]]] = {}
+    for r in top_rows:
+        di = int(r["doc_int"])
+        did = known.get(di, fetched.get(di))
+        if did is None:  # docmap gap — mirror inner-join semantics
+            continue
+        by_q.setdefault(int(r["query_id"]), []).append(
+            (float(r["score"]), did)
+        )
+    final = []
+    for qid in sorted(by_q):
+        ranked = sorted(by_q[qid], key=lambda t: (-t[0], t[1]))[:k]
+        final.extend((qid, d, s) for s, d in ranked)
+    return final, info

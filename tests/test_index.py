@@ -174,7 +174,12 @@ def test_search_without_vocab_parts_refuses_old_layout(spark, corpus,
     from oboyu_spark.operators.postings import (
         append_docs, compact_index, delete_docs, sync_docs,
     )
-    from oboyu_spark.operators.searchidx import IndexReader, _LAST_SCAN_INFO
+    from oboyu_spark.operators import searchidx as SI
+    from oboyu_spark.operators.searchidx import IndexReader
+
+    def live_parts(d, q):
+        return SI._search(spark, load_meta(d), None, d, q, 8,
+                          "taat")[1]["live_parts"]
 
     nopartials = str(tmp_path / "nopartials_idx")
     shutil.copytree(index_dir, nopartials)
@@ -182,12 +187,12 @@ def test_search_without_vocab_parts_refuses_old_layout(spark, corpus,
     for q in ["spark index", "検索 索引"]:
         exp = [(r["doc_id"], r["score"])
                for r in search_index(spark, index_dir, q, k=8).collect()]
-        base_parts = _LAST_SCAN_INFO["live_parts"]
+        base_parts = live_parts(index_dir, q)
         got = [(r["doc_id"], r["score"])
                for r in search_index(spark, nopartials, q, k=8).collect()]
         assert got == exp, q
         assert base_parts is not None
-        assert _LAST_SCAN_INFO["live_parts"] == base_parts  # still prunes
+        assert live_parts(nopartials, q) == base_parts  # still prunes
 
     old = str(tmp_path / "v3_idx")
     shutil.copytree(index_dir, old)
@@ -268,9 +273,12 @@ def test_append_with_open_reader(spark, index_dir, tmp_path):
 
 
 def test_index_reader_matches_oneshot(spark, index_dir):
-    from oboyu_spark.operators.searchidx import IndexReader
+    """A warm reader returns the one-shot results; a repeated search
+    whose terms and winners are all cached reports every stage, with
+    the skipped vocab lookup and hydration at 0.0."""
+    from oboyu_spark.operators import searchidx as SI
 
-    reader = IndexReader(spark, index_dir)
+    reader = SI.IndexReader(spark, index_dir)
     try:
         for q in ["spark index", "検索 索引", "zzz"]:
             a = [(r["doc_id"], r["score"])
@@ -278,6 +286,16 @@ def test_index_reader_matches_oneshot(spark, index_dir):
             b = [(r["doc_id"], r["score"])
                  for r in reader.search(q, k=8).collect()]
             assert a == b, q
+        rows, info = SI._search(
+            spark, reader.meta, reader._dfs, index_dir, "spark index", 8,
+            "taat", df_cache=reader._df_cache,
+            docmap_cache=reader._docmap_cache,
+        )
+        assert rows == reader.search_rows("spark index", k=8)
+        secs = info["stage_seconds"]
+        assert set(secs) == {"vocab", "scatter", "hydrate"}, secs
+        assert secs["vocab"] == 0.0 and secs["hydrate"] == 0.0, secs
+        assert secs["scatter"] > 0.0, secs
     finally:
         reader.close()
 
@@ -291,9 +309,14 @@ def test_gather_paths_identical(spark, corpus, index_dir, monkeypatch):
     reader = SI.IndexReader(spark, index_dir, cache=False)
     fast_rows = reader.search_rows(QUERIES, k=7)
     monkeypatch.setattr(SI, "DRIVER_CUT_MAX_ROWS", 0)  # force Spark window
+    reader._docmap_cache.clear()
     slow = search_index(spark, index_dir, QUERIES, k=7).collect()
     slow_rows = reader.search_rows(QUERIES, k=7)
     reader.close()
+    # the window path hydrates through the same driver-side tail, so it
+    # fills the warm reader's docmap cache too
+    assert slow_rows
+    assert {d for _, d, _ in slow_rows} <= set(reader._docmap_cache.values())
     key = lambda r: (r["query_id"], r["doc_id"], round(r["score"], 12))
     assert sorted(map(key, fast)) == sorted(map(key, slow))
     # the rows API returns the same results through BOTH gather paths
@@ -340,16 +363,18 @@ def test_part_pruning_equivalence(spark, corpus, tmp_path, monkeypatch):
                 for r in rows)))
         return out
 
+    def live_parts(q):
+        return SI._search(spark, load_meta(d), None, d, q, 5,
+                          "taat")[1]["live_parts"]
+
     pruned = run() + run(scorer="bmw") + run(mode="and")
     # the rare-only query really pruned: strict subset of parts
-    search_index(spark, d, "zza zzb", k=5).collect()
-    live = SI._LAST_SCAN_INFO["live_parts"]
-    assert live is not None and 0 < len(live) < meta["n_parts"], \
-        SI._LAST_SCAN_INFO
+    live = live_parts("zza zzb")
+    assert live is not None and 0 < len(live) < meta["n_parts"], live
 
     monkeypatch.setattr(SI, "PART_PRUNE_MAX_UNION", -1)  # legacy scan
     legacy = run() + run(scorer="bmw") + run(mode="and")
-    assert SI._LAST_SCAN_INFO["live_parts"] is None
+    assert live_parts("zza zzb") is None
     assert pruned == legacy
 
 

@@ -106,7 +106,6 @@ def test_search_prunes_parts_by_term(spark, tmp_path, monkeypatch):
 
     from pyspark.sql.readwriter import DataFrameReader
 
-    from oboyu_spark.operators import searchidx as SI
     from oboyu_spark.operators.searchidx import search_index
 
     d = str(tmp_path / "pruneidx")
@@ -126,6 +125,13 @@ def test_search_prunes_parts_by_term(spark, tmp_path, monkeypatch):
         read_paths.extend(paths)
         return real_parquet(self, *paths, **kw)
 
+    def postings_parts() -> list[int]:
+        """bparts whose postings directories the last search read."""
+        parts = sorted(int(re.search(r"postings/bpart=(\d+)$", p).group(1))
+                       for p in read_paths if "/postings" in p)
+        read_paths.clear()
+        return parts
+
     monkeypatch.setattr(DataFrameReader, "parquet", spy)
     sc = spark.sparkContext
     sc.setJobGroup("oneshot_pin", "one-shot search")
@@ -133,15 +139,20 @@ def test_search_prunes_parts_by_term(spark, tmp_path, monkeypatch):
         res = search_index(spark, d, "zebraquux", k=5).collect()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    monkeypatch.setattr(DataFrameReader, "parquet", real_parquet)
     jobs = sc.statusTracker().getJobIdsForGroup("oneshot_pin")
     assert len(jobs) == 8, f"one-shot search ran {len(jobs)} jobs: {jobs}"
     assert read_paths and not any("vocab_parts" in p for p in read_paths), \
         read_paths
     assert [r["doc_id"] for r in res] == ["250"]
-    # the search limited its scan to a strict subset of parts
-    live = SI._LAST_SCAN_INFO["live_parts"]
-    assert live == [2], SI._LAST_SCAN_INFO
+    # the search limited its scan to a strict subset of parts: only the
+    # postings/bpart=2 directory was read
+    live = postings_parts()
+    assert live == [2]
+    # a common term present everywhere scans all parts (no false prune)
+    res2 = search_index(spark, d, "common filler", k=3).collect()
+    assert len(res2) == 3
+    assert postings_parts() == [0, 1, 2]
+    monkeypatch.setattr(DataFrameReader, "parquet", real_parquet)
     # and that filter realizes DIRECTORY pruning: same filter shape on
     # the postings scan → PartitionFilters + only bpart=2 files opened
     pruned = spark.read.parquet(f"{d}/postings").filter(
@@ -154,10 +165,6 @@ def test_search_prunes_parts_by_term(spark, tmp_path, monkeypatch):
              pruned.select(F.input_file_name()).distinct().collect()}
     touched = {int(re.search(r"bpart=(\d+)", f).group(1)) for f in files}
     assert touched == {2}
-    # a common term present everywhere scans all parts (no false prune)
-    res2 = search_index(spark, d, "common filler", k=3).collect()
-    assert len(res2) == 3
-    assert SI._LAST_SCAN_INFO["live_parts"] == [0, 1, 2]
 
 
 def test_docmap_hydration_prunes_partitions(spark, tmp_path):

@@ -110,8 +110,12 @@ def test_auto_scorer_picks_by_geometry(spark, tmp_path):
     explicit scorers either way, and mode="and" stays on the TAAT
     intersection path."""
     from oboyu_spark.operators import searchidx as SI
-    from oboyu_spark.operators.postings import build_index
+    from oboyu_spark.operators.postings import build_index, load_meta
     from oboyu_spark.operators.searchidx import search_index
+
+    def decided(d, q):
+        return SI._search(spark, load_meta(d), None, d, q, 5,
+                          "auto")[1]["scorer"]
 
     rows = [(i, "common words shared by every document here "
              + ("rareterm " if i == 77 else "filler pad ") * 3)
@@ -133,19 +137,15 @@ def test_auto_scorer_picks_by_geometry(spark, tmp_path):
     try:
         res = search_index(spark, big, "rareterm common", k=5,
                            scorer="auto").collect()
-        assert SI._LAST_SCAN_INFO["auto_scorer"] == "bmw"
+        assert decided(big, "rareterm common") == "bmw"
         exp = search_index(spark, big, "rareterm common", k=5,
                            scorer="taat").collect()
         assert [(r.doc_id, round(r.score, 9)) for r in res] == \
                [(r.doc_id, round(r.score, 9)) for r in exp]
         # hot query (no selective term) -> TAAT even on big shards
-        search_index(spark, big, "common filler", k=5,
-                     scorer="auto").collect()
-        assert SI._LAST_SCAN_INFO["auto_scorer"] == "taat"
+        assert decided(big, "common filler") == "taat"
         # small shards -> TAAT even for the selective query
-        search_index(spark, small, "rareterm common", k=5,
-                     scorer="auto").collect()
-        assert SI._LAST_SCAN_INFO["auto_scorer"] == "taat"
+        assert decided(small, "rareterm common") == "taat"
         # conjunctive mode bypasses auto (intersection needs TAAT)
         got = search_index(spark, big, "rareterm common", k=5,
                            scorer="auto", mode="and").collect()
@@ -160,7 +160,7 @@ def test_auto_scorer_mixed_batch_dispatches_per_query(spark, tmp_path):
     TAAT in the SAME scatter, results rank-identical to both explicit
     scorers per query."""
     from oboyu_spark.operators import searchidx as SI
-    from oboyu_spark.operators.postings import build_index
+    from oboyu_spark.operators.postings import build_index, load_meta
     from oboyu_spark.operators.searchidx import search_index
 
     rows = [(i, "common words shared by every document here "
@@ -179,8 +179,10 @@ def test_auto_scorer_mixed_batch_dispatches_per_query(spark, tmp_path):
     try:
         got = search_index(spark, big, queries, k=5,
                            scorer="auto").collect()
-        assert SI._LAST_SCAN_INFO["auto_scorer"] == "mixed"
-        assert SI._LAST_SCAN_INFO["auto_bmw_queries"] == [0, 2]
+        info = SI._search(spark, load_meta(big), None, big, queries, 5,
+                          "auto")[1]
+        assert info["scorer"] == "mixed"
+        assert info["bmw_queries"] == [0, 2]
         for ref_scorer in ("taat", "bmw"):
             ref = search_index(spark, big, queries, k=5,
                                scorer=ref_scorer).collect()
